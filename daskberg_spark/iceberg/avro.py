@@ -7,8 +7,15 @@ raw codec + CRC) and ``zstd`` (via the Spark JVM's bundled zstd-jni —
 no Python zstd exists in this env) block codecs.  The
 reference reads these files with fastavro
 (``/root/reference/daskberg/ice.py:148-151,186-188``); that dependency is
-not available here, and the format is simple enough that a from-scratch
-decoder is ~200 lines.
+not available here, so decoding is done from scratch.
+
+Each schema compiles once into generated Python source: one decoder
+function with records, unions, array/map loops and the varint fast path
+inlined (:class:`_DecoderSource`), memoized by the container's raw
+``avro.schema`` bytes and column projection — a table's manifests share
+one schema, so a cold plan compiles it once.  The dispatching
+:func:`_decode` is the reference the compiled decoders are tested
+against.
 
 Container layout (Avro spec "Object Container Files"):
 
@@ -30,6 +37,7 @@ from __future__ import annotations
 import io
 import json
 import struct
+import threading
 import zlib
 from typing import Any, BinaryIO
 
@@ -164,9 +172,8 @@ def _decode(schema: Any, buf: io.BytesIO, names: dict[str, Any]) -> Any:
 
 
 def _rl(data: bytes, pos: int) -> tuple[int, int]:
-    """Zigzag varint from a bytes buffer — the compiled decoder's hot
-    primitive.  One-byte values (the overwhelming majority in manifest
-    metadata) take the branchless fast path."""
+    """Zigzag varint from a bytes buffer — what the compiled decoders
+    call for values longer than the one byte they decode inline."""
     b = data[pos]
     if b < 0x80:
         return (b >> 1) ^ -(b & 1), pos + 1
@@ -190,258 +197,334 @@ def _sl(data: bytes, pos: int) -> int:
     return pos + 1
 
 
-def _compile_skipper(schema: Any, names: dict[str, Any]):
-    """Compile a ``(data, pos) -> pos`` SKIPPER: advance past one value
-    of this schema without materializing it — what column projection
-    uses to not pay for unwanted fields (an executor projecting 2 of 40
-    AVRO columns otherwise decodes and discards 95% of its work)."""
-    schema = _skip_to_named(schema, names)
-    if isinstance(schema, list):
-        skips = [_compile_skipper(s, names) for s in schema]
+# Compiled decoders are generated Python source, so a manifest entry
+# decodes in one function call.  Schema text reaches the source only as
+# repr() literals (field names) or validated ints (fixed sizes); enum
+# symbols are bound as named constants.
+_MAX_INLINE_DEPTH = 6  # compound types nested inline before a helper def
 
-        def _skip_union(data, pos):
-            idx, pos = _rl(data, pos)
-            return skips[idx](data, pos)
 
-        return _skip_union
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            members = [_compile_skipper(f["type"], names) for f in schema["fields"]]
+class _DecoderSource:
+    """Source emitter for one schema's decoder.  ``value`` emits
+    statements that decode one value into a local variable, ``skip``
+    statements that only advance ``pos``.  Both work on the locals
+    ``data``, ``pos`` and ``n`` (``len(data)``).  Past
+    ``_MAX_INLINE_DEPTH`` nested compound types the rest is emitted as a
+    top-level helper function, so loop nesting stays far below CPython's
+    20-block static limit for any schema depth (and a recursive named
+    type becomes a recursive helper)."""
 
-            def _skip_record(data, pos):
-                for m in members:
-                    pos = m(data, pos)
-                return pos
+    def __init__(self, names: dict[str, Any]) -> None:
+        self.names = names
+        self.consts: dict[str, Any] = {
+            "_rl": _rl,
+            "_sl": _sl,
+            "_f4": struct.Struct("<f").unpack_from,
+            "_f8": struct.Struct("<d").unpack_from,
+        }
+        self.defs: list[str] = []
+        self.helpers: dict[tuple[int, bool], str] = {}
+        self.nvar = 0
 
-            return _skip_record
-        if t in ("array", "map"):
-            item = _compile_skipper(
-                schema["items"] if t == "array" else schema["values"], names
+    def var(self) -> str:
+        self.nvar += 1
+        return f"v{self.nvar}"
+
+    def const(self, value: Any) -> str:
+        name = f"c{len(self.consts)}"
+        self.consts[name] = value
+        return name
+
+    def build(self, main: list[str], name: str) -> Any:
+        ns = dict(self.consts)
+        code = "\n\n".join([*self.defs, "\n".join(main)]) + "\n"
+        exec(compile(code, "<avro decoder>", "exec"), ns)
+        return ns[name]
+
+    @staticmethod
+    def varint(out: list[str], ind: str, t: str) -> None:
+        """Zigzag varint into ``t``; one-byte values inline."""
+        out += [
+            f"{ind}b = data[pos]",
+            f"{ind}if b < 128:",
+            f"{ind}    {t} = (b >> 1) ^ -(b & 1)",
+            f"{ind}    pos += 1",
+            f"{ind}else:",
+            f"{ind}    {t}, pos = _rl(data, pos)",
+        ]
+
+    @staticmethod
+    def skip_varint(out: list[str], ind: str) -> None:
+        out += [
+            f"{ind}if data[pos] < 128:",
+            f"{ind}    pos += 1",
+            f"{ind}else:",
+            f"{ind}    pos = _sl(data, pos)",
+        ]
+
+    def union(self, schema: list, out: list[str], ind: str, emit) -> None:
+        """Branch on the union index.  ``i`` holds the index doubled (its
+        zigzag code when it fits one byte), so branch k tests ``i == 2k``
+        and a negative index can match no branch."""
+        i = self.var()
+        out += [
+            f"{ind}{i} = data[pos]",
+            f"{ind}pos += 1",
+            f"{ind}if {i} > 127:",
+            f"{ind}    {i}, pos = _rl(data, pos - 1)",
+            f"{ind}    {i} += {i}",
+        ]
+        for k, branch in enumerate(schema):
+            out.append(f"{ind}{'if' if k == 0 else 'elif'} {i} == {2 * k}:")
+            emit(branch, ind + "    ")
+        if schema:
+            out.append(f"{ind}else:")
+            ind += "    "
+        out.append(f"{ind}raise IndexError('avro union branch index out of range')")
+
+    def blocks(self, out: list[str], ind: str, c: str, skip: bool) -> str:
+        """Open an array/map block loop; returns the item indent.  A
+        negative count carries the block's byte size, which a decode
+        skips and a skip jumps over."""
+        out.append(f"{ind}while True:")
+        self.varint(out, ind + "    ", c)
+        out += [f"{ind}    if {c} == 0:", f"{ind}        break", f"{ind}    if {c} < 0:"]
+        if skip:
+            s = self.var()
+            self.varint(out, ind + "        ", s)
+            out += [f"{ind}        pos += {s}", f"{ind}        continue"]
+        else:
+            self.skip_varint(out, ind + "        ")
+            out.append(f"{ind}        {c} = -{c}")
+        out.append(f"{ind}    for _ in range({c}):")
+        return ind + "        "
+
+    def helper(self, schema: Any, skip: bool) -> str:
+        key = (id(schema), skip)
+        name = self.helpers.get(key)
+        if name is None:
+            name = self.helpers[key] = f"h{len(self.helpers)}"
+            body: list[str] = [f"def {name}(data, pos):", "    n = len(data)"]
+            if skip:
+                self.skip(schema, body, "    ", 0)
+                body.append("    return pos")
+            else:
+                t = self.var()
+                self.value(schema, body, "    ", t, 0)
+                body.append(f"    return {t}, pos")
+            self.defs.append("\n".join(body))
+        return name
+
+    def _nested(self, schema: Any, depth: int) -> bool:
+        return depth >= _MAX_INLINE_DEPTH and (
+            isinstance(schema, list)
+            or isinstance(schema, dict)
+            and schema["type"] in ("record", "array", "map")
+        )
+
+    def value(self, schema: Any, out: list[str], ind: str, t: str, depth: int) -> None:
+        schema = _skip_to_named(schema, self.names)
+        if self._nested(schema, depth):
+            out.append(f"{ind}{t}, pos = {self.helper(schema, False)}(data, pos)")
+            return
+        if isinstance(schema, list):
+            self.union(
+                schema, out, ind,
+                lambda br, ind2: self.value(br, out, ind2, t, depth + 1),
             )
-            is_map = t == "map"
+            return
+        if isinstance(schema, dict):
+            kind = schema["type"]
+            if kind == "record":
+                items = []
+                for f in schema["fields"]:
+                    v = self.var()
+                    self.value(f["type"], out, ind, v, depth + 1)
+                    items.append(f"{_field_literal(f)}: {v}")
+                out.append(f"{ind}{t} = {{{', '.join(items)}}}")
+            elif kind in ("array", "map"):
+                c, v = self.var(), self.var()
+                out.append(f"{ind}{t} = {'[]' if kind == 'array' else '{}'}")
+                inner = self.blocks(out, ind, c, skip=False)
+                if kind == "array":
+                    self.value(schema["items"], out, inner, v, depth + 1)
+                    out.append(f"{inner}{t}.append({v})")
+                else:
+                    k = self.var()
+                    self.value("string", out, inner, k, depth + 1)
+                    self.value(schema["values"], out, inner, v, depth + 1)
+                    out.append(f"{inner}{t}[{k}] = {v}")
+            elif kind == "fixed":
+                size = _fixed_size(schema)
+                e = self.var()
+                out += [
+                    f"{ind}{e} = pos + {size}",
+                    f"{ind}if {e} > n:",
+                    f"{ind}    raise EOFError('truncated fixed')",
+                    f"{ind}{t} = data[pos:{e}]",
+                    f"{ind}pos = {e}",
+                ]
+            elif kind == "enum":
+                symbols = self.const(schema["symbols"])
+                i = self.var()
+                self.varint(out, ind, i)
+                out.append(f"{ind}{t} = {symbols}[{i}]")
+            else:  # {"type": "string", ...} wrapper around a primitive
+                self.value(kind, out, ind, t, depth)
+            return
+        if schema == "null":
+            out.append(f"{ind}{t} = None")
+        elif schema == "boolean":
+            out += [f"{ind}{t} = data[pos] == 1", f"{ind}pos += 1"]
+        elif schema in ("int", "long"):
+            self.varint(out, ind, t)
+        elif schema in ("float", "double"):
+            width = 4 if schema == "float" else 8
+            out += [f"{ind}{t} = _f{width}(data, pos)[0]", f"{ind}pos += {width}"]
+        elif schema in ("bytes", "string"):
+            c, e = self.var(), self.var()
+            self.varint(out, ind, c)
+            tail = ".decode('utf-8')" if schema == "string" else ""
+            out += [
+                f"{ind}{e} = pos + {c}",
+                f"{ind}if {e} > n:",
+                f"{ind}    raise EOFError('truncated bytes')",
+                f"{ind}{t} = data[pos:{e}]{tail}",
+                f"{ind}pos = {e}",
+            ]
+        else:
+            raise NotImplementedError(f"avro type {schema!r}")
 
-            def _skip_blocks(data, pos):
-                while True:
-                    n, pos = _rl(data, pos)
-                    if n == 0:
-                        return pos
-                    if n < 0:
-                        # negative count carries a byte size → O(1) skip
-                        size, pos = _rl(data, pos)
-                        pos += size
-                        continue
-                    for _ in range(n):
-                        if is_map:
-                            ln, pos = _rl(data, pos)
-                            pos += ln
-                        pos = item(data, pos)
+    def skip(self, schema: Any, out: list[str], ind: str, depth: int) -> None:
+        schema = _skip_to_named(schema, self.names)
+        if self._nested(schema, depth):
+            out.append(f"{ind}pos = {self.helper(schema, True)}(data, pos)")
+            return
+        if isinstance(schema, list):
+            self.union(
+                schema, out, ind,
+                lambda br, ind2: self.skip(br, out, ind2, depth + 1),
+            )
+            return
+        if isinstance(schema, dict):
+            kind = schema["type"]
+            if kind == "record":
+                out.append(f"{ind}pass")
+                for f in schema["fields"]:
+                    self.skip(f["type"], out, ind, depth + 1)
+            elif kind in ("array", "map"):
+                inner = self.blocks(out, ind, self.var(), skip=True)
+                if kind == "map":
+                    self.skip("string", out, inner, depth + 1)
+                self.skip(
+                    schema["items" if kind == "array" else "values"],
+                    out, inner, depth + 1,
+                )
+            elif kind == "fixed":
+                out.append(f"{ind}pos += {_fixed_size(schema)}")
+            elif kind == "enum":
+                self.skip_varint(out, ind)
+            else:
+                self.skip(kind, out, ind, depth)
+            return
+        if schema == "null":
+            out.append(f"{ind}pass")
+        elif schema == "boolean":
+            out.append(f"{ind}pos += 1")
+        elif schema in ("int", "long"):
+            self.skip_varint(out, ind)
+        elif schema in ("float", "double"):
+            out.append(f"{ind}pos += {4 if schema == 'float' else 8}")
+        elif schema in ("bytes", "string"):
+            c = self.var()
+            self.varint(out, ind, c)
+            out.append(f"{ind}pos += {c}")
+        else:
+            raise NotImplementedError(f"avro type {schema!r}")
 
-            return _skip_blocks
-        if t == "fixed":
-            size = schema["size"]
-            return lambda data, pos: pos + size
-        if t == "enum":
-            return _sl
-        return _compile_skipper(t, names)
-    if schema == "null":
-        return lambda data, pos: pos
-    if schema == "boolean":
-        return lambda data, pos: pos + 1
-    if schema in ("int", "long"):
-        return _sl
-    if schema == "float":
-        return lambda data, pos: pos + 4
-    if schema == "double":
-        return lambda data, pos: pos + 8
-    if schema in ("bytes", "string"):
+    def fields(self, schema: dict, wanted: Any, out: list[str], ind: str) -> list[tuple[str, str]]:
+        """Decode a top-level record's wanted fields and skip the rest;
+        returns ``(name literal, variable)`` per decoded field."""
+        kept = []
+        for f in schema["fields"]:
+            if wanted is None or f["name"] in wanted:
+                v = self.var()
+                self.value(f["type"], out, ind, v, 1)
+                kept.append((_field_literal(f), v))
+            else:
+                self.skip(f["type"], out, ind, 1)
+        return kept
 
-        def _skip_len(data, pos):
-            n, pos = _rl(data, pos)
-            return pos + n
 
-        return _skip_len
-    raise NotImplementedError(f"avro type {schema!r}")
+def _field_literal(field: dict[str, Any]) -> str:
+    name = field["name"]
+    if not isinstance(name, str):
+        raise ValueError(f"avro field name must be a string, got {name!r}")
+    return repr(name)
+
+
+def _fixed_size(schema: dict[str, Any]) -> int:
+    size = schema["size"]
+    if type(size) is not int or size < 0:
+        raise ValueError(f"avro fixed size must be a non-negative int, got {size!r}")
+    return size
 
 
 def _compile_decoder(schema: Any, names: dict[str, Any], wanted: Any = None):
-    """Compile an Avro schema into a ``(data, pos) -> (value, pos)``
-    closure chain ONCE, instead of re-dispatching on the schema dict for
-    every field of every record (``_decode``'s shape).  Same decode
-    semantics by construction — the differential property test drives
-    both paths — but ~2× faster on manifest-shaped data, which is what
-    bounds driver planning time on huge tables (a 1M-file table's
-    manifests are ~1M record decodes per cold plan).
+    """Compile an Avro schema ONCE into a ``(data, pos) -> (value, pos)``
+    function generated as Python source, instead of re-dispatching on
+    the schema dict for every field of every record (``_decode``'s
+    shape).  Same decode semantics — the differential tests drive both —
+    and the checks ``_decode`` makes: EOFError on truncated bytes,
+    strings and fixed values, IndexError on a truncated varint or an
+    out-of-range union index.
 
     ``wanted`` (a set of field names, or None for all) projects the
-    TOP-LEVEL record: unwanted fields compile to position skippers that
+    TOP-LEVEL record: unwanted fields compile to position skips that
     never materialize values — byte-exact with the full decode on the
     fields that remain."""
+    src = _DecoderSource(names)
     schema = _skip_to_named(schema, names)
-    if (
-        wanted is not None
-        and isinstance(schema, dict)
-        and schema.get("type") == "record"
-    ):
-        members_p: list[tuple[str | None, Any, bool]] = []
-        for f in schema["fields"]:
-            if f["name"] in wanted:
-                members_p.append(
-                    (f["name"], _compile_decoder(f["type"], names), True)
-                )
-            else:
-                members_p.append(
-                    (None, _compile_skipper(f["type"], names), False)
-                )
-
-        def _record_proj(data, pos):
-            out = {}
-            for name, fn, keep in members_p:
-                if keep:
-                    out[name], pos = fn(data, pos)
-                else:
-                    pos = fn(data, pos)
-            return out, pos
-
-        return _record_proj
-    if isinstance(schema, list):
-        # the ubiquitous ["null", X] union gets a two-way fast path
-        if len(schema) == 2 and schema[0] == "null":
-            dec1 = _compile_decoder(schema[1], names)
-
-            def _union_null(data, pos):
-                idx, pos = _rl(data, pos)
-                if idx == 0:
-                    return None, pos
-                return dec1(data, pos)
-
-            return _union_null
-        branches = [_compile_decoder(s, names) for s in schema]
-
-        def _union(data, pos):
-            idx, pos = _rl(data, pos)
-            return branches[idx](data, pos)
-
-        return _union
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            members = [
-                (f["name"], _compile_decoder(f["type"], names))
-                for f in schema["fields"]
-            ]
-
-            def _record(data, pos):
-                out = {}
-                for name, dec in members:
-                    out[name], pos = dec(data, pos)
-                return out, pos
-
-            return _record
-        if t == "array":
-            item = _compile_decoder(schema["items"], names)
-
-            def _array(data, pos):
-                out = []
-                while True:
-                    n, pos = _rl(data, pos)
-                    if n == 0:
-                        return out, pos
-                    if n < 0:
-                        _, pos = _rl(data, pos)
-                        n = -n
-                    for _ in range(n):
-                        v, pos = item(data, pos)
-                        out.append(v)
-
-            return _array
-        if t == "map":
-            val = _compile_decoder(schema["values"], names)
-
-            def _map(data, pos):
-                out = {}
-                while True:
-                    n, pos = _rl(data, pos)
-                    if n == 0:
-                        return out, pos
-                    if n < 0:
-                        _, pos = _rl(data, pos)
-                        n = -n
-                    for _ in range(n):
-                        ln, pos = _rl(data, pos)
-                        key = data[pos : pos + ln].decode("utf-8")
-                        pos += ln
-                        out[key], pos = val(data, pos)
-
-            return _map
-        if t == "fixed":
-            size = schema["size"]
-
-            def _fixed(data, pos):
-                end = pos + size
-                if end > len(data):
-                    # mirror _bytes/_string: a short slice silently
-                    # returned as the value feeds wrong bytes into
-                    # pruning bounds — fail loudly like every other
-                    # truncation
-                    raise EOFError("truncated fixed")
-                return data[pos:end], end
-
-            return _fixed
-        if t == "enum":
-            symbols = schema["symbols"]
-
-            def _enum(data, pos):
-                idx, pos = _rl(data, pos)
-                return symbols[idx], pos
-
-            return _enum
-        return _compile_decoder(t, names)
-    if schema == "null":
-        return lambda data, pos: (None, pos)
-    if schema == "boolean":
-        return lambda data, pos: (data[pos] == 1, pos + 1)
-    if schema in ("int", "long"):
-        return _rl
-    if schema == "float":
-        unpack_f = struct.unpack
-
-        def _float(data, pos):
-            return unpack_f("<f", data[pos : pos + 4])[0], pos + 4
-
-        return _float
-    if schema == "double":
-        unpack_d = struct.unpack
-
-        def _double(data, pos):
-            return unpack_d("<d", data[pos : pos + 8])[0], pos + 8
-
-        return _double
-    if schema == "bytes":
-
-        def _bytes(data, pos):
-            n, pos = _rl(data, pos)
-            end = pos + n
-            if end > len(data):
-                raise EOFError("truncated bytes")
-            return data[pos:end], end
-
-        return _bytes
-    if schema == "string":
-
-        def _string(data, pos):
-            n, pos = _rl(data, pos)
-            end = pos + n
-            if end > len(data):
-                raise EOFError("truncated bytes")
-            return data[pos:end].decode("utf-8"), end
-
-        return _string
-    raise NotImplementedError(f"avro type {schema!r}")
+    main = ["def decode(data, pos):", "    n = len(data)"]
+    if wanted is not None and isinstance(schema, dict) and schema.get("type") == "record":
+        kept = src.fields(schema, wanted, main, "    ")
+        main.append(f"    return {{{', '.join(f'{k}: {v}' for k, v in kept)}}}, pos")
+    else:
+        t = src.var()
+        src.value(schema, main, "    ", t, 0)
+        main.append(f"    return {t}, pos")
+    return src.build(main, "decode")
 
 
-def _parse_header(buf) -> tuple[dict[str, bytes], Any, str, bytes, dict]:
-    """Container header → (metadata, schema, codec, sync, name registry)."""
+_DECODERS: dict[tuple, Any] = {}
+_DECODERS_MAX = 64
+_DECODERS_LOCK = threading.Lock()
+
+
+def _cached_decoder(raw_schema: bytes, wanted: Any = None, columnar: bool = False):
+    """The compiled decoder (or columnar factory) for a container's raw
+    ``avro.schema`` bytes and projection, memoized: every manifest of a
+    table shares one schema, so a cold plan compiles it once."""
+    key = (raw_schema, None if wanted is None else frozenset(wanted), columnar)
+    with _DECODERS_LOCK:
+        fn = _DECODERS.get(key)
+    if fn is None:
+        schema = json.loads(raw_schema)
+        names: dict[str, Any] = {}
+        _register_names(schema, names)
+        compile_fn = _compile_columnar_decoder if columnar else _compile_decoder
+        fn = compile_fn(schema, names, wanted)
+        with _DECODERS_LOCK:
+            if len(_DECODERS) >= _DECODERS_MAX:
+                del _DECODERS[next(iter(_DECODERS))]
+            _DECODERS[key] = fn
+    return fn
+
+
+def _parse_header(buf) -> tuple[dict[str, bytes], str, bytes]:
+    """Container header → (metadata, codec, sync).  The schema stays the
+    raw ``avro.schema`` bytes: :func:`_cached_decoder` parses it only
+    when no decoder for it is compiled yet."""
     if buf.read(4) != MAGIC:
         raise ValueError("not an Avro object container file")
     meta: dict[str, bytes] = {}
@@ -456,11 +539,8 @@ def _parse_header(buf) -> tuple[dict[str, bytes], Any, str, bytes, dict]:
             key = _read_bytes(buf).decode("utf-8")
             meta[key] = _read_bytes(buf)
     sync = buf.read(16)
-    schema = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode()
-    names: dict[str, Any] = {}
-    _register_names(schema, names)
-    return meta, schema, codec, sync, names
+    return meta, codec, sync
 
 
 def _decompress_block(block: bytes, codec: str) -> bytes:
@@ -484,8 +564,8 @@ def _decompress_block(block: bytes, codec: str) -> bytes:
 def read_avro(data: bytes) -> tuple[dict[str, bytes], list[dict[str, Any]]]:
     """Decode an Avro object-container file → (file metadata, records)."""
     buf = io.BytesIO(data)
-    meta, schema, codec, sync, names = _parse_header(buf)
-    dec = _compile_decoder(schema, names)
+    meta, codec, sync = _parse_header(buf)
+    dec = _cached_decoder(meta["avro.schema"])
     records: list[dict[str, Any]] = []
     while True:
         try:
@@ -589,42 +669,31 @@ def avro_block_index(path: str) -> list[tuple[int, int]]:
         return out
 
 
-def _compile_columnar_decoder(
-    schema: Any, names: dict[str, Any], wanted: Any = None
-) -> tuple[dict[str, list], Any]:
+def _compile_columnar_decoder(schema: Any, names: dict[str, Any], wanted: Any = None):
     """Columnar variant of :func:`_compile_decoder` for a TOP-LEVEL
-    record schema: returns ``(cols, row_fn)`` where ``row_fn(data,
-    pos) -> pos`` decodes one record APPENDING each kept field's value
-    straight into its list in ``cols`` — no per-row dict is ever
-    built, and no second per-column extraction pass runs (the two
-    costs that dominate the row-oriented decode when the consumer is
-    a columnar engine).  Unwanted fields compile to position skippers.
-    Decode semantics are byte-identical by construction: every field
-    decoder/skipper is the SAME closure ``_compile_decoder`` /
-    ``_compile_skipper`` emit."""
+    record schema: returns a generated factory whose every call gives a
+    fresh ``(cols, row_fn)``, where ``row_fn(data, pos) -> pos`` decodes
+    one record APPENDING each kept field's value straight into its list
+    in ``cols`` — no per-row dict is ever built, and no second
+    per-column extraction pass runs (the two costs that dominate the
+    row-oriented decode when the consumer is a columnar engine).
+    Unwanted fields compile to position skips.  Decode semantics are
+    byte-identical by construction: fields go through the same emitter
+    as :func:`_compile_decoder`."""
     schema = _skip_to_named(schema, names)
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("columnar decode requires a top-level record")
-    cols: dict[str, list] = {}
-    members: list[tuple[Any, Any]] = []
-    for f in schema["fields"]:
-        if wanted is None or f["name"] in wanted:
-            lst: list = []
-            cols[f["name"]] = lst
-            members.append((lst.append, _compile_decoder(f["type"], names)))
-        else:
-            members.append((None, _compile_skipper(f["type"], names)))
-
-    def _row(data: bytes, pos: int) -> int:
-        for app, fn in members:
-            if app is None:
-                pos = fn(data, pos)
-            else:
-                v, pos = fn(data, pos)
-                app(v)
-        return pos
-
-    return cols, _row
+    src = _DecoderSource(names)
+    row = ["    def row(data, pos):", "        n = len(data)"]
+    kept = src.fields(schema, wanted, row, "        ")
+    row += [f"        a{j}({v})" for j, (_k, v) in enumerate(kept)]
+    row.append("        return pos")
+    # a repeated field name keeps the LAST list in cols, as dict
+    # assignment does
+    make = ["def make():", "    cols = {}"]
+    for j, (k, _v) in enumerate(kept):
+        make += [f"    l{j} = cols[{k}] = []", f"    a{j} = l{j}.append"]
+    return src.build([*make, *row, "    return cols, row"], "make")
 
 
 def read_avro_range_columns(
@@ -642,10 +711,10 @@ def read_avro_range_columns(
     scan's ``mapInArrow`` leg (fields absent from the file schema are
     simply absent keys; the caller null-fills)."""
     with open(path, "rb") as f:
-        _meta, schema, codec, sync, names = _parse_header(f)
-        cols, row_fn = _compile_columnar_decoder(
-            schema, names, wanted=set(columns) if columns is not None else None
-        )
+        meta, codec, sync = _parse_header(f)
+        cols, row_fn = _cached_decoder(
+            meta["avro.schema"], columns, columnar=True
+        )()
         nrows = 0
         first_block, row_offset = _locate_first_block(
             f, sync, start, end, want_row_offset, known_block
@@ -749,10 +818,8 @@ def read_avro_range(
     planning hands every task its own entry so per-task work stays
     O(own range))."""
     with open(path, "rb") as f:
-        meta, schema, codec, sync, names = _parse_header(f)
-        dec = _compile_decoder(
-            schema, names, wanted=set(columns) if columns is not None else None
-        )
+        meta, codec, sync = _parse_header(f)
+        dec = _cached_decoder(meta["avro.schema"], columns)
         first_block, row_offset = _locate_first_block(
             f, sync, start, end, want_row_offset, known_block
         )
@@ -1014,8 +1081,8 @@ def _compile_type_encoder(schema: Any, names: dict[str, Any]):
     schemas use (primitives, logical-type wrappers, 2-branch null
     unions).  Returns None outside that subset — the caller keeps the
     generic recursive ``_encode`` (manifest schemas with nested
-    records/arrays/maps take that path unchanged).  Mirrors the
-    compiled DECODER closures: the win is skipping per-value schema
+    records/arrays/maps take that path unchanged).  Like the compiled
+    decoders, the win is skipping per-value schema
     dispatch and union type-matching, measured ~3× on the distributed
     AVRO write leg."""
     schema = _skip_to_named(schema, names)

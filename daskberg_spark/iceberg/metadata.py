@@ -8,8 +8,10 @@ pinning, manifest-list + manifest Avro decoding with a cross-scan cache,
 ADDED/EXISTING/DELETED reconciliation, and path relocation.
 
 Deviations (deliberate, documented):
-- Manifest fetches are parallelized with a thread pool (the reference is
-  sequential with a "TODO: do concurrently" at ``ice.py:185``).
+- The reference's "TODO: do concurrently" manifest loop (``ice.py:185``)
+  stays a plain loop on the driver: manifests are local files whose
+  decode is GIL-bound Python, so a thread pool only contends for the
+  GIL.  Large tables plan on executors instead (``scan_all``).
 - Bound bytes decode per Iceberg spec, not the reference's endianness
   (see conversions.py docstring).
 """
@@ -19,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import re
-from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from daskberg_spark.iceberg.avro import read_avro_file
@@ -64,7 +65,9 @@ def _strip_scheme(path: str) -> str:
 def _relocate_path(path: str, original_url: str, url: str) -> str:
     """Module-level relocation (picklable for executor-side planning)."""
     path = _strip_scheme(path)
-    if original_url and (
+    if not original_url or original_url == url:
+        return path  # nothing to relocate: the rewrite below is a no-op
+    if (
         path == original_url
         # boundary-checked prefix: '/old/tbl' must NOT rewrite
         # '/old/tbl_backup/...' into a path under this table
@@ -637,7 +640,7 @@ class IcebergTable:
     ) -> tuple[
         dict[str, dict[str, Any]], dict[tuple[str, int], dict[str, Any]]
     ]:
-        """Manifest-level prune → load (parallel) → status reconcile.
+        """Manifest-level prune → load → status reconcile.
 
         Returns ``(data_files, delete_files)`` — ``{path: record}`` and
         ``{(path, blob_offset): record}`` maps (a v3 puffin file carries
@@ -645,10 +648,13 @@ class IcebergTable:
         entries last across all
         manifests (``ice.py:165-204``).  ``delete_files`` holds v2
         position/equality delete files (``content`` 1/2); the reference
-        is v1-only and has no counterpart.  Results are memoized per
-        (snapshot, filters, mode) — to_df plans data files and delete
-        files in the same read, so without the cache every query would
-        reconcile all manifests twice.
+        is v1-only and has no counterpart.  Driver-path results are
+        memoized per (snapshot, surviving manifest paths): the result
+        depends on nothing else, so to_df's unfiltered ``scan_all()`` and
+        ``plan_deletes()`` reuse the filtered plan's reconciliation
+        whenever the partition summaries pruned no manifest.  The
+        distributed path also keys on the filters, which it applies per
+        file.
 
         Above ``DASKBERG_DIST_PLAN_GATE`` estimated entries (manifest-
         list counters, zero IO) and with an active SparkSession, the
@@ -661,18 +667,8 @@ class IcebergTable:
         so plans are identical by construction.
         """
         distributed = self._dist_plan_spark() if self._entry_estimate() >= _dist_plan_gate() else None
-        # mode in the key: the distributed path file-level-prunes under
-        # filters (fewer records for the same args), and the gate
-        # decision can flip between calls (an active session appearing)
-        cache_key = (
-            self.current_snapshot["snapshot-id"],
-            repr(filters),
-            distributed is not None,
-        )
-        if cache_key in self._scan_cache:
-            return self._scan_cache[cache_key]
         fields = self.fields
-        surviving: list[tuple[str, int]] = []
+        surviving: list[tuple[str, int, Any, Any]] = []
         for mf in self.manifest_list:
             spec_fields = self._spec_fields(mf.get("partition_spec_id", 0))
             summaries = mf.get("partitions") or []
@@ -688,20 +684,25 @@ class IcebergTable:
                     mf.get("sequence_number"),
                 )
             )
+        cache_key: tuple = (
+            self.current_snapshot["snapshot-id"],
+            tuple(p for p, _, _, _ in surviving),
+        )
+        if distributed is not None:
+            # the executors file-level-prune under filters (fewer records
+            # for the same manifests), and the gate decision can flip
+            # between calls (an active session appearing)
+            cache_key += (repr(filters),)
+        if cache_key in self._scan_cache:
+            return self._scan_cache[cache_key]
 
         if distributed is not None and surviving:
             event_lists = self._scan_manifests_distributed(
                 distributed, surviving, filters
             )
         else:
-            # Parallel manifest IO (reference TODO at ice.py:185).
-            paths = [p for p, _, _, _ in surviving]
-            with ThreadPoolExecutor(
-                max_workers=min(16, max(1, len(paths)))
-            ) as pool:
-                loaded = dict(zip(paths, pool.map(self._load_manifest, paths)))
             event_lists = [
-                _entry_events(loaded[path], spec_id, msnap, mseq,
+                _entry_events(self._load_manifest(path), spec_id, msnap, mseq,
                               self.original_url, self.url)
                 for path, spec_id, msnap, mseq in surviving
             ]

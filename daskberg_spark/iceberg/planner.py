@@ -279,6 +279,7 @@ def _passes_partition(
     info: FieldInfo,
     value: Any,
     spec_by_source: dict[int, dict[str, Any]] | None,
+    tvs: dict[str, tuple[bool, Any]],
 ) -> bool:
     """(a) partition-value check through the transform (ice.py:296-318).
 
@@ -286,31 +287,36 @@ def _passes_partition(
     (``spec_by_source``): on a spec-evolved table an older spec may
     reuse a field name with a different transform (e.g. changed bucket
     width), and checking through the default spec's transform would
-    prune with the wrong function → silently missing rows."""
+    prune with the wrong function → silently missing rows.
+
+    ``tvs`` memoizes, per transform, this predicate's transformed value
+    and whether the point check is exact, across the files of one plan:
+    both depend only on the predicate and the transform, not the file."""
     transform, partition_name = _file_spec_entry(info, spec_by_source)
     if transform and transform != "void":
         part = data_file.get("partition") or {}
         if partition_name in part:
-            fn, ordered = get_transform(transform)
+            hit = tvs.get(transform)
+            if hit is None:
+                fn, ordered = get_transform(transform)
+                # order-preserving transforms check every op (exact only
+                # for identity); a hash only equality-shaped ones
+                exact = ordered and transform == "identity"
+                tv = (
+                    _predicate_tv(fn, op, value, info)
+                    if ordered or op in ("==", "=", "in")
+                    else _NO_TV
+                )
+                hit = tvs[transform] = (exact, tv)
+            exact, tv = hit
             pval = partition_value_to_python(
                 part[partition_name],
                 transform_result_type(transform, info.type),
             )
             if transform == "day" and pval is not None and not isinstance(pval, int):
                 pval = (pval - datetime.date(1970, 1, 1)).days
-            exact = transform == "identity"
-            if ordered:
-                tv = _predicate_tv(fn, op, value, info)
-                if tv is not _NO_TV and not point_may_match(
-                    op, tv, pval, exact
-                ):
-                    return False
-            elif op in ("==", "=", "in"):
-                tv = _predicate_tv(fn, op, value, info)
-                if tv is not _NO_TV and not point_may_match(
-                    op, tv, pval, exact=False
-                ):
-                    return False
+            if tv is not _NO_TV and not point_may_match(op, tv, pval, exact):
+                return False
     return True
 
 
@@ -336,11 +342,11 @@ def _passes_bounds(
 
 def _file_passes_resolved(
     data_file: dict[str, Any],
-    resolved: list[tuple[str, FieldInfo, Any]],
+    resolved: list[tuple[str, FieldInfo, Any, dict]],
     spec_by_source: dict[int, dict[str, Any]] | None = None,
 ) -> bool:
-    for op, info, value in resolved:
-        if not _passes_partition(data_file, op, info, value, spec_by_source):
+    for op, info, value, tvs in resolved:
+        if not _passes_partition(data_file, op, info, value, spec_by_source, tvs):
             return False
         if not _passes_bounds(data_file, op, info, value):
             return False
@@ -756,13 +762,16 @@ def _vector_survivors(np, files, resolved_conjunctions, spec_map, partitioned):
     answer-identical to the scalar loop (differentially tested)."""
     n = len(files)
     plans = [
-        [(op, info, value, _vector_value(op, info, value)) for op, info, value in resolved]
+        [
+            (op, info, value, tvs, _vector_value(op, info, value))
+            for op, info, value, tvs in resolved
+        ]
         for resolved in resolved_conjunctions
     ]
     vec_preds = [
         (op, info)
         for plan in plans
-        for op, info, value, vnum in plan
+        for op, info, value, tvs, vnum in plan
         if vnum is not _SCALAR and vnum is not _ALWAYS
     ]
     gathered = _gather_bounds(
@@ -773,11 +782,11 @@ def _vector_survivors(np, files, resolved_conjunctions, spec_map, partitioned):
     total = np.zeros(n, dtype=bool)
     for plan in plans:
         conj = np.ones(n, dtype=bool)
-        for op, info, value, vnum in plan:
+        for op, info, value, tvs, vnum in plan:
             if partitioned(info):
                 for i, f in enumerate(files):
                     if conj[i] and not _passes_partition(
-                        f, op, info, value, spec_map(f)
+                        f, op, info, value, spec_map(f), tvs
                     ):
                         conj[i] = False
             if vnum is _ALWAYS:
@@ -833,7 +842,9 @@ def apply_filters(
                 ]
             else:
                 value = normalize_value(raw_value, info.type)
-            resolved.append((op, info, value))
+            # last: the predicate's transformed value per partition
+            # transform, filled by _passes_partition on first use
+            resolved.append((op, info, value, {}))
         resolved_conjunctions.append(resolved)
     spec_cache: dict[int, dict[int, dict[str, Any]]] = {}
 

@@ -405,20 +405,53 @@ def test_block_index_known_block_exact(tmp_path):
         assert all(p == k for p, k in got)
 
 
-def test_compiled_decoder_matches_legacy():
-    """The schema-compiled decoder (closure chain over bytes+pos — what
-    both read loops use) is decode-identical to the legacy dispatching
-    ``_decode`` across unions, nested records, arrays, maps, enums,
-    fixed, and every primitive."""
-    import io
-
+def _assert_compiled_matches_legacy(schema, rows, wanted=None):
+    """Encode ``rows``, then decode them with the generated decoder and
+    with the legacy dispatching ``_decode``; both must agree with each
+    other and with the input (projected to ``wanted``)."""
     from daskberg_spark.iceberg.avro import (
+        _compile_columnar_decoder,
         _compile_decoder,
         _decode,
         _encode,
         _register_names,
     )
 
+    names: dict = {}
+    _register_names(schema, names)
+    buf = bytearray()
+    for r in rows:
+        _encode(schema, r, buf, names)
+    data = bytes(buf)
+    bio = io.BytesIO(data)
+    legacy = [_decode(schema, bio, names) for _ in rows]
+    if wanted is not None:
+        legacy = [{k: v for k, v in r.items() if k in wanted} for r in legacy]
+    dec = _compile_decoder(schema, names, wanted)
+    pos = 0
+    got = []
+    for _ in rows:
+        v, pos = dec(data, pos)
+        got.append(v)
+    assert pos == len(data)
+    assert got == legacy
+    if isinstance(schema, dict) and schema.get("type") == "record":
+        cols, row = _compile_columnar_decoder(schema, names, wanted)()
+        pos = 0
+        for _ in rows:
+            pos = row(data, pos)
+        assert pos == len(data)
+        assert cols == {k: [r[k] for r in legacy] for k in (legacy[0] if legacy else cols)}
+    return got
+
+
+def test_compiled_decoder_matches_legacy():
+    """The schema-compiled decoder (generated source over bytes+pos —
+    what every read loop uses) is decode-identical to the legacy
+    dispatching ``_decode`` across unions, nested records, arrays, maps,
+    enums, fixed, and every primitive; and on the manifest-entry and
+    manifest-list schemas the writer emits, with and without a
+    top-level projection."""
     schema = {
         "type": "record",
         "name": "outer",
@@ -460,22 +493,200 @@ def test_compiled_decoder_matches_legacy():
         }
         for i in range(200)
     ]
-    names: dict = {}
-    _register_names(schema, names)
-    buf = bytearray()
-    for r in rows:
-        _encode(schema, r, buf, names)
-    data = bytes(buf)
-    dec = _compile_decoder(schema, names)
-    pos = 0
-    got_compiled = []
-    for _ in rows:
-        v, pos = dec(data, pos)
-        got_compiled.append(v)
-    assert pos == len(data)
-    bio = io.BytesIO(data)
-    got_legacy = [_decode(schema, bio, names) for _ in rows]
-    assert got_compiled == got_legacy
+    assert _assert_compiled_matches_legacy(schema, rows) == rows
+    _assert_compiled_matches_legacy(schema, rows, wanted={"s", "kv", "u3"})
+
+    from daskberg_spark.iceberg.writer import (
+        _MANIFEST_FILE_SCHEMA,
+        _manifest_entry_schema,
+    )
+
+    entry_schema = _manifest_entry_schema(
+        [
+            {"name": "k_bucket", "transform": "bucket[16]", "_source_name": "k", "field-id": 1000},
+            {"name": "d_day", "transform": "day", "_source_name": "d", "field-id": 1001},
+        ],
+        {"k": "long", "d": "date"},
+    )
+    entries = [
+        {
+            "status": i % 3,
+            "snapshot_id": None if i % 4 == 0 else 8_000_000_000_000_000_000 + i,
+            "sequence_number": None if i % 2 else i,
+            "file_sequence_number": None if i % 2 else i,
+            "data_file": {
+                "content": 0 if i % 5 else 1,
+                "file_path": f"/warehouse/db/t/data/{i:05d}-é.parquet",
+                "file_format": "PARQUET" if i % 7 else "PUFFIN",
+                "partition": {"k_bucket": None if i % 9 == 0 else i % 16, "d_day": 19000 + i},
+                "record_count": 1 + i * 977,
+                "file_size_in_bytes": 4096 + i * 70_001,
+                "null_value_counts": [{"key": c, "value": i % (c + 1)} for c in range(1, 4)],
+                "nan_value_counts": None if i % 2 else [{"key": 3, "value": 0}],
+                "lower_bounds": [{"key": c, "value": (i * c).to_bytes(8, "little")} for c in range(1, 4)],
+                "upper_bounds": None if i % 11 == 0 else [{"key": 1, "value": b"\xff" * (i % 9)}],
+                "equality_ids": None if i % 5 else [1, 2],
+                "referenced_data_file": None if i % 7 else f"/warehouse/db/t/data/{i - 1:05d}.parquet",
+                "content_offset": None if i % 7 else 4 + i,
+                "content_size_in_bytes": None if i % 7 else 40 + i,
+                "first_row_id": None if i % 3 else i * 1000,
+                "variant_bounds": None,
+            },
+        }
+        for i in range(150)
+    ]
+    assert _assert_compiled_matches_legacy(entry_schema, entries) == entries
+    _assert_compiled_matches_legacy(entry_schema, entries, wanted={"status", "data_file"})
+    _assert_compiled_matches_legacy(entry_schema, entries, wanted={"snapshot_id"})
+
+    manifests = [
+        {
+            "manifest_path": f"/warehouse/db/t/metadata/m{i}.avro",
+            "manifest_length": 5000 + i,
+            "partition_spec_id": i % 2,
+            "sequence_number": None if i % 3 == 0 else i,
+            "min_sequence_number": None if i % 3 == 0 else max(0, i - 2),
+            "added_snapshot_id": 1 << 60 | i,
+            "added_data_files_count": i,
+            "existing_data_files_count": None if i % 2 else 2 * i,
+            "deleted_data_files_count": 0,
+            "partitions": None if i % 4 == 0 else [
+                {"contains_null": j % 2 == 0, "lower_bound": None if j else b"\x01\x00\x00\x00",
+                 "upper_bound": bytes([j, i % 256, 0, 0])}
+                for j in range(i % 3)
+            ],
+            "added_rows_count": 10 * i,
+            "existing_rows_count": None,
+            "deleted_rows_count": 0,
+        }
+        for i in range(60)
+    ]
+    assert _assert_compiled_matches_legacy(_MANIFEST_FILE_SCHEMA, manifests) == manifests
+    _assert_compiled_matches_legacy(
+        _MANIFEST_FILE_SCHEMA, manifests, wanted={"manifest_path", "partitions"}
+    )
+
+
+def test_compiled_decoder_deep_nesting():
+    """A schema nesting arrays, maps and records far past CPython's
+    20-block static nesting limit still compiles (the emitter moves the
+    deep part into helper functions) and decodes like ``_decode`` —
+    also when the deep field is skipped by a projection, and for a
+    recursive named type."""
+
+    def level(i):
+        if i == 0:
+            return {"type": "record", "name": "leaf", "fields": [{"name": "x", "type": "long"}]}
+        inner = level(i - 1)
+        container = (
+            {"type": "array", "items": inner} if i % 2 else {"type": "map", "values": inner}
+        )
+        return {
+            "type": "record",
+            "name": f"r{i}",
+            "fields": [
+                {"name": "n", "type": ["null", "int"]},
+                {"name": "c", "type": container},
+            ],
+        }
+
+    def value(i, seed):
+        if i == 0:
+            return {"x": seed}
+        kids = [value(i - 1, seed * 2 + k) for k in range(2 if i > depth - 3 else 1)]
+        c = kids if i % 2 else {f"k{k}": v for k, v in enumerate(kids)}
+        return {"n": None if seed % 2 else i, "c": c}
+
+    depth = 24
+    schema = {
+        "type": "record",
+        "name": "top",
+        "fields": [
+            {"name": "deep", "type": level(depth)},
+            {"name": "tail", "type": "string"},
+        ],
+    }
+    rows = [{"deep": value(depth, s), "tail": f"t{s}"} for s in range(2)]
+    assert _assert_compiled_matches_legacy(schema, rows) == rows
+    _assert_compiled_matches_legacy(schema, rows, wanted={"tail"})
+
+    # a recursive named type decodes through a recursive helper
+    node = {
+        "type": "record",
+        "name": "node",
+        "fields": [{"name": "v", "type": "long"}, {"name": "next", "type": ["null", "node"]}],
+    }
+    chains = [None]
+    for i in range(30):
+        chains.append({"v": i, "next": chains[-1]})
+    assert _assert_compiled_matches_legacy(node, chains[1:]) == chains[1:]
+
+
+def test_compiled_decoder_hostile_schema_text():
+    """Field names, record names and enum symbols are schema text, never
+    source: quotes, newlines and Python code in them decode literally
+    and nothing in them runs."""
+    import daskberg_spark.iceberg.avro as A
+
+    evil = [
+        "a'b",
+        'c"d',
+        "new\nline",
+        "x': __import__('os').system('exit 7'), 'y",
+        "\\'); raise SystemExit(3) #",
+        "}, pos\nraise SystemExit(4)\n#",
+    ]
+    schema = {
+        "type": "record",
+        "name": "r'\n\"); raise SystemExit(5)",
+        "fields": [
+            {"name": name, "type": ["null", {
+                "type": "enum",
+                "name": f"e{i}'\"",
+                "symbols": [name, f"{name}\n2", "__import__('sys').exit(6)"],
+            }]}
+            for i, name in enumerate(evil)
+        ] + [{"name": "nested", "type": {
+            "type": "record", "name": "in'ner", "fields": [{"name": evil[3], "type": "long"}],
+        }}],
+    }
+    rows = [
+        {
+            **{
+                name: None if (i + j) % 4 == 0 else [name, f"{name}\n2", "__import__('sys').exit(6)"][(i + j) % 3]
+                for i, name in enumerate(evil)
+            },
+            "nested": {evil[3]: j},
+        }
+        for j in range(8)
+    ]
+    assert _assert_compiled_matches_legacy(schema, rows) == rows
+    _assert_compiled_matches_legacy(schema, rows, wanted={evil[0], evil[4]})
+    buf = io.BytesIO()
+    write_avro(schema, rows, buf)
+    A._DECODERS.clear()
+    assert read_avro(buf.getvalue())[1] == rows
+
+
+def test_fixed_size_must_be_int():
+    """A ``fixed`` size is written into the generated source, so anything
+    but a non-negative int is rejected at compile time, never run."""
+    from daskberg_spark.iceberg.avro import _compile_decoder
+
+    for size in ["4", "1); raise SystemExit(9", 4.0, True, -1, None, [4]]:
+        schema = {
+            "type": "record",
+            "name": "r",
+            "fields": [{"name": "f", "type": ["null", {"type": "fixed", "name": "fx", "size": size}]}],
+        }
+        with pytest.raises(ValueError, match="fixed size"):
+            _compile_decoder(schema, {})
+        with pytest.raises(ValueError, match="fixed size"):
+            _compile_decoder(schema, {}, wanted={"other"})  # skipped, still checked
+        buf = io.BytesIO()
+        write_avro(schema, [{"f": None}], buf)
+        with pytest.raises(ValueError, match="fixed size"):
+            read_avro(buf.getvalue())
 
 
 def test_fixed_length_validated_at_encode(tmp_path):

@@ -508,6 +508,83 @@ def test_relocate_path_boundary(tmp_path):
     assert t._relocate("/old/tbl") == p
 
 
+def test_relocate_path_fast_path_matches_general():
+    """With nothing to relocate (no original_url, or original_url equal
+    to the table url) _relocate_path returns the scheme-stripped path
+    without the prefix logic; pin it to the general rewrite."""
+    from daskberg_spark.iceberg.metadata import _relocate_path
+
+    def general(path, original_url, url):
+        if path.startswith("file://"):
+            path = path[len("file://"):]
+        if original_url and (
+            path == original_url
+            or path.startswith(original_url.rstrip("/") + "/")
+        ):
+            path = url + path[len(original_url):]
+        return path
+
+    paths = [
+        "file:///old/tbl/data/x.parquet",
+        "/old/tbl",
+        "file:///old/tbl",
+        "/old/tbl/data/x.parquet",
+        "/old/tbl_backup/data/x.parquet",
+        "/elsewhere/y.parquet",
+    ]
+    for original_url, url in [
+        ("/old/tbl", "/old/tbl"),
+        ("", "/old/tbl"),
+        ("/old/tbl", "/new/home"),
+    ]:
+        for path in paths:
+            assert _relocate_path(path, original_url, url) == general(
+                path, original_url, url
+            ), (path, original_url, url)
+
+
+def test_scan_cache_keyed_by_surviving_manifests(tmp_path):
+    """The driver-path reconciliation depends only on the snapshot and
+    the manifests that survive summary pruning: a filtered scan whose
+    summaries prune nothing shares its cache entry with the unfiltered
+    scan (one entry, the same dicts); one that prunes a manifest gets its
+    own.  Every result equals a fresh handle's."""
+    from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.writer import IcebergWriter
+
+    p = str(tmp_path / "t")
+    w = IcebergWriter(
+        p,
+        [
+            {"id": 1, "name": "p", "type": "long", "required": False},
+            {"id": 2, "name": "v", "type": "long", "required": False},
+        ],
+        [{"name": "p", "transform": "identity", "source": "p"}],
+    )
+    w.append([{"p": 1, "v": 10}, {"p": 1, "v": 11}])
+    w.append([{"p": 2, "v": 20}])
+
+    # summaries prune nothing: 'v' is not a partition column
+    t = IcebergTable(p)
+    filtered = t.scan_all([("v", ">", 0)])
+    unfiltered = t.scan_all()
+    assert len(t._scan_cache) == 1
+    assert unfiltered[0] is filtered[0] and unfiltered[1] is filtered[1]
+    assert t.plan_deletes() == IcebergTable(p).plan_deletes()
+    assert len(t._scan_cache) == 1
+    assert unfiltered == IcebergTable(p).scan_all()
+    assert filtered == IcebergTable(p).scan_all([("v", ">", 0)])
+
+    # the p == 1 summary prunes the second append's manifest
+    t = IcebergTable(p)
+    pruned = t.scan_all([("p", "==", 1)])
+    full = t.scan_all()
+    assert len(t._scan_cache) == 2
+    assert len(pruned[0]) < len(full[0])
+    assert pruned == IcebergTable(p).scan_all([("p", "==", 1)])
+    assert full == IcebergTable(p).scan_all()
+
+
 def test_tombstoned_unsupported_format_is_readable(spark, tmp_path):
     """Review r9 (metadata): a DELETED tombstone of an unsupported-format
     file must not fail the scan — the file is never read."""

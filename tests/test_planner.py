@@ -490,3 +490,62 @@ def test_footer_lift_nan_semantics(tmp_path, spark):
         os.path.join(spn, f), {"v": "double"}
     )
     assert "v" not in lo and "v" not in hi and "v" not in nans
+
+
+@pytest.mark.parametrize("n_files", [1000, 40])  # vector path, scalar loop
+def test_predicate_transform_computed_once_per_spec(monkeypatch, n_files):
+    """The partition transform of a predicate value depends only on the
+    predicate and the file's spec, so a plan computes it once per
+    (predicate, transform) — O(#specs x #predicates), not O(#files) —
+    and prunes exactly as a file-by-file plan does."""
+    import daskberg_spark.iceberg.planner as planner
+    from daskberg_spark.iceberg.transforms import bucket
+
+    specs = {
+        0: [
+            {"source-id": 3, "name": "sym_bucket", "transform": "bucket[4]"},
+            {"source-id": 4, "name": "cat", "transform": "identity"},
+        ],
+        1: [
+            {"source-id": 3, "name": "sym_bucket", "transform": "bucket[8]"},
+            {"source-id": 4, "name": "cat", "transform": "identity"},
+        ],
+    }
+    files = []
+    for i in range(n_files):
+        sid = i % 2
+        sym = f"s{i % 37}"
+        f = mkfile(
+            f"f{i:04d}",
+            partition={"sym_bucket": bucket(sym, 8 if sid else 4), "cat": "a" if i % 3 else "b"},
+        )
+        f["_spec_id"] = sid
+        files.append(f)
+    filters = [
+        [("sym", "==", "s5"), ("cat", "==", "a")],
+        [("sym", "in", ["s1", "s2"])],
+    ]
+    # one file at a time: every plan starts with no memoized value
+    expected = [
+        f for f in files
+        if apply_filters([f], filters, FIELDS, lambda sid: specs[sid])
+    ]
+
+    calls = []
+    real = planner.get_transform
+
+    def counting(name):
+        fn, ordered = real(name)
+
+        def counted(v):
+            calls.append(name)
+            return fn(v)
+
+        return counted, ordered
+
+    monkeypatch.setattr(planner, "get_transform", counting)
+    got = apply_filters(files, filters, FIELDS, lambda sid: specs[sid])
+    assert [f["file_path"] for f in got] == [f["file_path"] for f in expected]
+    assert 0 < len(got) < n_files
+    # 2 specs x (2 equality predicates + one 2-value 'in')
+    assert len(calls) <= 2 * (2 + 2)
